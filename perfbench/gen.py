@@ -1,4 +1,4 @@
-"""Seeded input generators for the four benchmark workloads.
+"""Seeded input generators for the benchmark workloads.
 
 Each generator writes one workload's inputs plus a ``truth.json`` holding
 the expected outputs the harness checks against. The same seed always gives
@@ -149,115 +149,6 @@ def gen_etl(out, seed, scale):
                               unknown_planted=len(unknown)))
 
 
-# ---------------------------------------------------------------- corpus_dedup
-
-DEDUP = dict(
-    docs=4000,
-    family_share=0.3,   # share of docs inside planted near-duplicate families
-    family_size=5,      # one original + 4 edited copies
-    edit_rate=0.01,     # share of tokens substituted per edited copy
-    exact_share=0.05,   # share of docs that are exact copies of a singleton
-    doc_tokens=200,
-)
-STOP = ["the", "of", "and", "to", "in", "is", "that", "for", "it", "as", "was", "with"]
-
-
-def gen_dedup(out, seed, scale):
-    rnd = random.Random(seed)
-    p = DEDUP
-    n = max(50, int(p["docs"] * scale))
-    vocab = [f"w{i}" for i in range(20000)]
-
-    def doc():
-        toks = [rnd.choice(STOP) if rnd.random() < 0.3 else rnd.choice(vocab)
-                for _ in range(p["doc_tokens"])]
-        if rnd.random() < 0.2:  # some noisy docs, so quality scores spread
-            toks = [t + str(rnd.randrange(100)) if rnd.random() < 0.2 else t for t in toks]
-        return toks
-
-    def edit(toks):
-        toks = list(toks)
-        for _ in range(max(1, round(len(toks) * p["edit_rate"]))):
-            toks[rnd.randrange(len(toks))] = rnd.choice(vocab)
-        return toks
-
-    fam_docs = int(n * p["family_share"]) // p["family_size"] * p["family_size"]
-    n_exact = int(n * p["exact_share"])
-    n_single = n - fam_docs - 2 * n_exact
-    texts, families = [], []
-    for _ in range(fam_docs // p["family_size"]):
-        base = doc()
-        members = [base] + [edit(base) for _ in range(p["family_size"] - 1)]
-        families.append(list(range(len(texts), len(texts) + len(members))))
-        texts += [" ".join(m) for m in members]
-    for _ in range(n_exact):
-        t = " ".join(doc())
-        families.append([len(texts), len(texts) + 1])
-        texts += [t, t]
-    texts += [" ".join(doc()) for _ in range(n_single)]
-    # shuffle ids so families are not contiguous id ranges
-    perm = list(range(len(texts)))
-    rnd.shuffle(perm)
-    os.makedirs(out, exist_ok=True)
-    with open(os.path.join(out, "docs.jsonl"), "w") as fh:
-        for old in range(len(texts)):
-            fh.write(json.dumps({"doc_id": perm[old], "text": texts[old]}) + "\n")
-    fams = [sorted(perm[i] for i in f) for f in families]
-    planted = sum(len(f) * (len(f) - 1) // 2 for f in fams)
-    with open(os.path.join(out, "families.json"), "w") as fh:
-        json.dump(fams, fh)
-    return dict(docs=len(texts), families=len(fams), planted_pairs=planted,
-                family_size=p["family_size"], duplicate_share=(fam_docs + 2 * n_exact) / len(texts))
-
-
-# ---------------------------------------------------------------- ann_serve
-
-ANN = dict(
-    vectors=20000, dim=64, clusters=32, spread=0.35,
-    probe_batch=16,      # queries per probe request
-    query_locality=2,    # clusters a probe batch draws its queries from
-    add_batch=200,       # fresh vectors per ivfAdd request
-    cycle=10,            # every 10th request is an add
-    requests=100,        # one fixed request sequence (90 probes, 10 adds)
-    eval_batches=3,      # probe batches re-checked against brute force
-)
-
-
-def gen_ann(out, seed, scale):
-    rnd = random.Random(seed)
-    p = ANN
-    n = max(500, int(p["vectors"] * scale))
-    dim = p["dim"]
-    centers = [[rnd.gauss(0, 1) for _ in range(dim)] for _ in range(p["clusters"])]
-
-    def vec(c):
-        return [x + rnd.gauss(0, p["spread"]) for x in centers[c]]
-
-    def line(i, v):
-        return f"{i}," + " ".join(f"{x:.5f}" for x in v) + "\n"
-
-    os.makedirs(out, exist_ok=True)
-    with open(os.path.join(out, "corpus.csv"), "w") as fh:
-        for i in range(n):
-            fh.write(line(i, vec(rnd.randrange(p["clusters"]))))
-    next_id = 10 ** 7  # added vectors and queries never collide with corpus ids
-    with open(os.path.join(out, "requests.csv"), "w") as fh:
-        # request index, kind, vector id, vector
-        for r in range(p["requests"]):
-            if r % p["cycle"] == p["cycle"] - 1:
-                size, kind, local = max(10, int(p["add_batch"] * scale)), "add", None
-            else:
-                size, kind = p["probe_batch"], "probe"
-                local = [rnd.randrange(p["clusters"]) for _ in range(p["query_locality"])]
-            for _ in range(size):
-                c = rnd.choice(local) if local else rnd.randrange(p["clusters"])
-                fh.write(f"{r},{kind}," + line(next_id, vec(c)))
-                next_id += 1
-    return dict(vectors=n, dim=dim, clusters=p["clusters"], requests=p["requests"],
-                probe_batch=p["probe_batch"], query_locality=p["query_locality"],
-                add_batch=max(10, int(p["add_batch"] * scale)), eval_batches=p["eval_batches"])
-
-
 # ---------------------------------------------------------------- graph_communities
 
 GRAPH = dict(
@@ -323,8 +214,6 @@ def _pick(rnd, cum):
 
 GENERATORS = {
     "etl_pipeline": gen_etl,
-    "corpus_dedup": gen_dedup,
-    "ann_serve": gen_ann,
     "graph_communities": gen_graph,
 }
 

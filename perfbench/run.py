@@ -103,12 +103,15 @@ def report(doc, path):
         w("  per-layer:")
         for m in doc["layer_metrics"]:
             line(m)
-        w(f"  {'span':<24}{'count':>6}{'total_s':>10}{'self_s':>10}{'jobs':>7}{'tasks':>7}"
+        w(f"  {'span':<32}{'count':>6}{'total_s':>10}{'self_s':>10}{'jobs':>7}{'tasks':>7}"
           f"{'cpu_s':>9}{'no_task_s':>10}{'plans_s':>9}")
         for s in doc["spans"]:
-            w(f"  {s['span']:<24}{s['count']:>6}{s['total_s']:>10.3f}{s['self_s']:>10.3f}"
+            w(f"  {s['span']:<32}{s['count']:>6}{s['total_s']:>10.3f}{s['self_s']:>10.3f}"
               f"{s['jobs']:>7}{s['tasks']:>7}{s['task_cpu_s']:>9.3f}{s['no_task_s']:>10.3f}"
               f"{s['plans_s']:>9.3f}")
+    for k, v in sorted(doc["notes"].items()):
+        if isinstance(v, str):
+            w(f"  {k}: {v}")
     n = doc["noise"]
     w(f"  noise: canary_s={n['canary_s']} loadavg_1m={n['loadavg_1m']} cpus={n['cpus']}")
     w(f"  checks: {'PASS' if doc['correct'] else 'FAIL'} attempted={doc['attempted']} "

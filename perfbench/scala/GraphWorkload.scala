@@ -99,14 +99,14 @@ object GraphWorkload extends Workload {
         attempted = base.attempted + tr.seconds.size,
         failed = base.failed + tr.failed,
         failures = base.failures ++ tr.errors,
-        named = base.named ++ Seq(
+        layers = Layers.metrics(t, t.named("op"), p50),
+        layerOwn = Seq(
           Metric("ops.graph.pagerank_s", t.selfMean("ops.graph.pagerank"), "s"),
           Metric("ops.graph.louvain_s", t.selfMean("ops.graph.louvain"), "s"),
+          Metric("ops.graph.louvain_jobs", Stats.mean(lv.map(_.jobs.toDouble)), "count"),
+          Metric("ops.graph.louvain_tasks", Stats.mean(lv.map(_.tasks.toDouble)), "count"),
           Metric("ops.graph.louvain_task_cpu_s", Stats.mean(lv.map(_.cpuNs / 1e9)), "s"),
           Metric("ops.graph.louvain_no_task_s", Stats.mean(lvS), "s")),
-        layers = Layers.metrics(t, t.named("op"), p50, Map(
-          "ops.graph.louvain_jobs" -> Stats.mean(lv.map(_.jobs.toDouble)),
-          "ops.graph.louvain_tasks" -> Stats.mean(lv.map(_.tasks.toDouble)))),
         spanTable = Layers.table(t),
         notes = base.notes ++ Map("materialization" ->
           "each result written to parquet inside its own span"))

@@ -5,15 +5,6 @@ import org.apache.spark.graftbench.{Counters, Span, Tracer}
 /** Turns a traced run's spans into the per-layer metrics and span table. */
 object Layers {
 
-  /** Layer counters every traced run reports; a workload that does not
-    * reach a layer reports 0 for it (the counter really stayed at 0). */
-  val layerCounts: Seq[(String, String)] = Seq(
-    "sources.chunk_fetches" -> "count", "sources.rchar_bytes" -> "bytes",
-    "sources.rows_out" -> "count",
-    "etl.rows_kept" -> "count", "etl.transform_records" -> "count",
-    "etl.error_rows" -> "count", "etl.envelopes" -> "count",
-    "ops.graph.louvain_jobs" -> "count", "ops.graph.louvain_tasks" -> "count")
-
   final case class Traced(spans: Seq[Span], counters: Map[Int, Counters]) {
     def named(name: String): Seq[Span] = spans.filter(_.name == name)
     def incl(s: Span): Counters = Tracer.inclusive(s, spans, counters)
@@ -47,18 +38,17 @@ object Layers {
       m("plans.queries", "count")((_, k) => k.queries.toDouble))
   }
 
-  /** The full per-layer metric list of a traced run: engine metrics over
-    * `ops`, tracing overhead, and the layer counters (missing ones are 0). */
-  def metrics(t: Traced, ops: Seq[Span], untracedOpS: Double,
-      counts: Map[String, Double]): Seq[Metric] = {
-    val unknown = counts.keySet -- layerCounts.map(_._1)
-    require(unknown.isEmpty, s"undeclared layer counters: $unknown")
+  /** The per-layer metrics every workload reports (BENCHMARK.json's
+    * `per_layer`): engine metrics over `ops` and the tracing overhead.
+    * Metrics of one layer (its times and counters) would read 0 on a
+    * workload that does not reach it, so each workload reports those
+    * alongside, in [[Outcome.layerOwn]]. */
+  def metrics(t: Traced, ops: Seq[Span], untracedOpS: Double): Seq[Metric] = {
     val tracedOpS = Stats.median(ops.map(_.seconds))
     engine(t, ops) ++ Seq(
       Metric("trace.traced_op_s", tracedOpS, "s"),
       Metric("trace.untraced_op_s", untracedOpS, "s"),
-      Metric("trace.overhead_frac", tracedOpS / untracedOpS - 1.0, "frac")) ++
-      layerCounts.map { case (n, u) => Metric(n, counts.getOrElse(n, 0.0), u) }
+      Metric("trace.overhead_frac", tracedOpS / untracedOpS - 1.0, "frac"))
   }
 
   /** One row per span name: occurrences, total and self seconds, and the

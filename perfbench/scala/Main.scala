@@ -11,7 +11,9 @@ final case class Metric(name: String, value: Double, unit: String)
 
 /** What one workload run hands back to [[Main]]. `e2e` holds the contract
   * metrics (all but setup_s); `named` the same measurements under the
-  * workload's own metric names; `layers` the traced run's layer metrics. */
+  * workload's own metric names; `layers` the traced run's per-layer metrics
+  * that every workload reports, `layerOwn` those of the layers only this
+  * workload reaches. */
 final case class Outcome(
     attempted: Long,
     failed: Long,
@@ -19,6 +21,7 @@ final case class Outcome(
     e2e: Seq[Metric],
     named: Seq[Metric],
     layers: Seq[Metric] = Nil,
+    layerOwn: Seq[Metric] = Nil,
     spanTable: Seq[Map[String, Any]] = Nil,
     notes: Map[String, Any] = Map.empty)
 
@@ -60,8 +63,6 @@ object Main {
 
   val workloads: Map[String, Workload] = Map(
     "etl_pipeline" -> EtlWorkload,
-    "corpus_dedup" -> DedupWorkload,
-    "ann_serve" -> AnnWorkload,
     "graph_communities" -> GraphWorkload)
 
   def session(work: String): SparkSession = {
@@ -138,7 +139,7 @@ object Main {
       "named_metrics" -> (Metric("setup_s", setupS, "s") +:
         Metric("failed_frac", o.failed.toDouble / math.max(1L, o.attempted), "frac") +: o.named)
         .map(m => Map("name" -> m.name, "value" -> m.value, "unit" -> m.unit)),
-      "layer_metrics" -> o.layers.map(m => Map("name" -> m.name, "value" -> m.value, "unit" -> m.unit)),
+      "layer_metrics" -> (o.layers ++ o.layerOwn).map(m => Map("name" -> m.name, "value" -> m.value, "unit" -> m.unit)),
       "spans" -> o.spanTable,
       "setup" -> Map("setup_s_runs" -> setups, "cold_setup_s" -> coldSetupS,
         "what" -> "SparkSession creation + one warm-up run on the warm input"),
