@@ -1225,9 +1225,8 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** (id, sim, band, bh) rows — the shared band derivation of the simhash
-    * pairs path and its audit, factored so the two can never drift apart
-    * (same rationale as [[minhashBandRows]]). */
+  /** (id, sim, band, bh) rows — the band derivation of the simhash pairs
+    * path. */
   private def simhashBandRows(docs: DataFrame, textCol: String, idCol: String,
       bands: Int, width: Int, tokenHash: String): DataFrame = {
     val mask = (1L << width) - 1
@@ -1242,20 +1241,6 @@ object Dedup {
     Seq(4, 8, 16, 32).find(_ > maxHamming).getOrElse(
       throw new IllegalArgumentException(
         s"maxHamming=$maxHamming too large: LSH banding over 64 bits supports < 32"))
-
-  /** Audit for [[simhashDuplicatePairs]]' bucket cap: (band, band hash,
-    * member count) of every bucket the pairs path would DROP, so excluded
-    * volume is reported instead of silently losing the hottest duplicate
-    * clusters (same contract as [[oversizedMinhashBuckets]]). */
-  def oversizedSimhashBuckets(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxHamming: Int = 3,
-      maxBucketSize: Int = 1000, tokenHash: String = "xx64"): DataFrame = {
-    val bands = simhashBandCount(maxHamming)
-    simhashBandRows(docs, textCol, idCol, bands, 64 / bands, tokenHash)
-      .groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > maxBucketSize)
-  }
 
   /** CROSS-document duplicate SUBSTRING spans — exact substring-level
     * dedup (the "Deduplicating Training Data Makes Language Models

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge DataFrames. Companion to the
@@ -40,6 +40,54 @@ object Graph {
           .cast(t)))
   }
 
+  /** The (src, ns[]) ADJACENCY INDEX every frontier and power loop below
+    * probes (first measured on [[bfsHops]], 6.6→3.7 s). One collect_set
+    * aggregation folds the parallel-edge dedup and the grouping into a
+    * single exchange and materializes V index rows instead of E edge rows;
+    * the out-degree is size(ns), free. Each round then equi-joins a slim
+    * per-node state against the index and explodes only the MATCHED
+    * lists in-task, so the per-round shuffle moves V state rows + the
+    * partially aggregated sums, where an edge-table join re-shuffles all
+    * E rows every round. Degree-skew contract: one adjacency array per
+    * node must fit an executor row (fine through ~10⁷-degree hubs) —
+    * ENFORCED by [[guardDegree]] (`graft.graph.maxDegree`, a named error
+    * instead of an executor OOM); a web-scale hub graph should pre-cap
+    * degree or salt-split hub rows upstream. The checkpoint is LAZY
+    * (round-10 job-floor cut): each caller's first consumer materializes
+    * it inside its own job. Null endpoints are the caller's choice:
+    * collect_set skips a null dst but keeps a null-src group, so callers
+    * that drop nulls filter ([[nonNullEdges]]) first. */
+  private def adjacency(edges: DataFrame): DataFrame =
+    guardDegree(edges.select(col("src"), col("dst"))
+      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
+      "src", "ns")
+      .localCheckpoint(false)
+
+  /** A null is not a node: drop edges with a null endpoint EXPLICITLY
+    * instead of inheriting aggregate null semantics. */
+  private def nonNullEdges(edges: DataFrame): DataFrame =
+    edges.filter(col("src").isNotNull && col("dst").isNotNull)
+
+  /** The dst side of a (src, ns[]) index as (node) rows. */
+  private def dstNodes(adj: DataFrame): DataFrame =
+    adj.select(explode(col("ns")).as("node"))
+
+  /** The dst side of a (src, ns[(dst, w)]) weighted index as (node) rows. */
+  private def weightedDstNodes(adj: DataFrame): DataFrame =
+    adj.select(explode(col("ns")).as("e")).select(col("e.dst").as("node"))
+
+  /** Node set of an adjacency index. symmetric: dst values ⊆ src keys, so
+    * the adjacency keys are the node set — a projection of the
+    * materialized index (checkpointing a copy would only add a job);
+    * general: dst-only sinks exist and need the explode+distinct union
+    * (lazily checkpointed: consumed per round; the caller's first
+    * consumer materializes it). */
+  private def nodeSet(adj: DataFrame, symmetric: Boolean,
+      dsts: DataFrame => DataFrame = dstNodes): DataFrame =
+    if (symmetric) adj.select(col("src").as("node"))
+    else adj.select(col("src").as("node")).unionByName(dsts(adj))
+      .distinct().localCheckpoint(false)
+
   /** PageRank with damping 0.85 over a directed edge list, fixed
     * iteration count — entity-importance scoring (e.g. rank parts by
     * co-purchase centrality, domains by cross-link mass) where the
@@ -53,24 +101,13 @@ object Graph {
     * of mass per node per round (≈10⁻¹² relative) — ordering-irrelevant,
     * determinism-preserving.
     *
-    * Scale shape: contributions probe an ADJACENCY INDEX (the [[bfsHops]]
-    * form, applied here after it won there 6.6→3.7 s). One up-front
-    * collect_set aggregation folds the parallel-edge dedup and the
-    * grouping into a single exchange and materializes (src, ns[]) — V
-    * index rows instead of E edge rows; the out-degree is size(ns), free.
-    * Each round then equi-joins the slim (node, pr) state against the
-    * V-row index and explodes the matched adjacency lists IN-TASK, so the
-    * per-round shuffle moves V state rows + the partially-aggregated
-    * contribution sums, where the previous (src, dst, deg)-table form
-    * re-shuffled all E rows through the join every round. The state frame
-    * checkpoints only every `checkpointInterval` rounds: a bounded
-    * iteration count chains fine through Catalyst in one job, while long
-    * runs need the barrier to cap lineage depth and stage-retry blast
-    * radius (measured locally: per-round checkpoints tripled a 5-round
-    * wall-clock in scheduler overhead alone). N (node count) is a
-    * control-plane scalar. Nodes with no inbound edges settle at the base
-    * rank; dangling nodes (no outbound) leak their mass by DEFAULT — the
-    * standard simplification — or redistribute it uniformly when
+    * Scale shape: contributions probe the [[adjacency]] index, which
+    * replaced a (src, dst, deg)-table form that re-shuffled all E rows
+    * through the join every round; the rounds are [[powerIteration]].
+    * N (node count) is a control-plane scalar. Nodes with no inbound
+    * edges settle at the base rank; dangling nodes (no outbound) leak
+    * their mass by DEFAULT — the standard simplification — or
+    * redistribute it uniformly when
     * `redistributeDangling` is set: each round then runs one extra slim
     * aggregate (Σ pr over the once-built dangling-node frame, a 1-row
     * control-plane collect that becomes the next round's literal — the
@@ -80,11 +117,6 @@ object Graph {
     * graph the frame is empty, the collects are skipped, and the output
     * is bit-identical to the default path. Mass-conserving mode
     * checkpoints the state per round (the collect forces it anyway).
-    * Degree-skew contract: one adjacency array per node must fit in an
-    * executor row — ENFORCED at build time by [[guardDegree]]
-    * (`graft.graph.maxDegree`, named error instead of an executor OOM);
-    * a web-scale hub graph should pre-cap degree or salt-split hub rows
-    * upstream.
     *
     * @param edges (src, dst) rows; pass both directions for undirected
     * @param symmetric caller-asserted "every (src,dst) has its (dst,src)"
@@ -101,27 +133,10 @@ object Graph {
       checkpointInterval: Int = 8, symmetric: Boolean = false,
       redistributeDangling: Boolean = false): DataFrame = {
     require(iterations >= 1, "pageRank needs at least one iteration")
-    // (src, ns[]) — collect_set dedups parallel edges, so this IS the
-    // distinct-edge adjacency; out-degree = size(ns). NULL endpoints are
-    // dropped EXPLICITLY (a null is not a node): collect_set would skip
-    // null dst anyway but silently keep a null-src group — declare the
-    // contract instead of inheriting aggregate null semantics.
-    // lazy index + node checkpoints (round-10 job-floor cut): the
-    // control-plane count below is the first consumer and materializes
-    // them inside its own job
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false)
-    // symmetric: dst values ⊆ src keys, so the adjacency keys are the
-    // node set — a projection of the materialized index (checkpointing
-    // a copy would only add a job); general: dst-only sinks exist and
-    // need the explode+distinct union (checkpointed: consumed per round)
-    val nodes = if (symmetric) adj.select(col("src").as("node"))
-      else adj.select(col("src").as("node"))
-        .unionByName(adj.select(explode(col("ns")).as("node")))
-        .distinct().localCheckpoint(false)
+    // the control-plane count below is the first consumer of the lazy
+    // index + node checkpoints and materializes them inside its own job
+    val adj = adjacency(nonNullEdges(edges))
+    val nodes = nodeSet(adj, symmetric)
     val n = nodes.count() // control-plane scalar (drives two literals)
     val base = 150000000000L / n // floor(0.15 · 1e12 / N)
     // mass-conserving mode: dangling nodes (no out-edges) are exactly the
@@ -132,33 +147,60 @@ object Graph {
         .localCheckpoint() // consumed once per round
     else null
     val dangActive = dang != null && !dang.isEmpty
-    var pr = nodes.withColumn("pr", lit(1000000000000L / n))
+    // div N floors like every other mass split here
+    val dangShare: DataFrame => Long =
+      if (dangActive) pr => pr.join(dang, Seq("node"), "left_semi")
+        .agg(coalesce(sum(col("pr")), lit(0L))).head.getLong(0) / n
+      else _ => 0L
+    // dangling mode: the next round's collect forces the state anyway —
+    // checkpoint every round so it is computed once, not re-derived per
+    // consumer
+    powerIteration(nodes.withColumn("pr", lit(1000000000000L / n)),
+      iterations, if (dangActive) 1 else checkpointInterval, symmetric,
+      nodes, Left(base), uniformContrib(adj), Some(dangShare))
+  }
+
+  /** (node, sc): Σ of `pr div out_deg` over each node's in-edges — the
+    * unweighted contribution frame of [[powerIteration]]. */
+  private def uniformContrib(adj: DataFrame)(pr: DataFrame): DataFrame =
+    adj.join(pr.withColumnRenamed("node", "src"), "src")
+      .select(col("ns"), expr("pr div size(ns)").as("c"))
+      .select(explode(col("ns")).as("node"), col("c"))
+      .groupBy(col("node")).agg(sum(col("c")).as("sc"))
+
+  /** The one PageRank POWER ITERATION ([[pageRank]],
+    * [[personalizedPageRank]], [[pageRankWeighted]]): per round
+    * pr' = teleport + (85·(Σcontrib + dangShare)) div 100. `teleport` is
+    * one literal base or a (node, sb) per-node seed-base frame; general
+    * input left-joins the sums onto `nodes` (or the seed-base frame) so
+    * nodes without inbound mass keep their base. The state checkpoints
+    * only every `checkpointInterval` rounds: a bounded iteration count
+    * chains fine through Catalyst in one job, while long runs need the
+    * barrier to cap lineage depth and stage-retry blast radius (measured
+    * locally: per-round checkpoints tripled a 5-round wall-clock in
+    * scheduler overhead alone). */
+  private def powerIteration(pr0: DataFrame, iterations: Int,
+      checkpointInterval: Int, symmetric: Boolean, nodes: DataFrame,
+      teleport: Either[Long, DataFrame], contrib: DataFrame => DataFrame,
+      dangShare: Option[DataFrame => Long] = None): DataFrame = {
+    // symmetric: every node has an inbound mirror edge, so the sums' key
+    // set is the node set and the left join against it is the identity
+    val sum0 = if (symmetric) "sc" else "coalesce(sc, 0L)"
+    var pr = pr0
     for (i <- 1 to iterations) {
-      // dangling mass of the CURRENT state, folded in as a literal (the
-      // 1-row control-plane collect discipline); div N floors like every
-      // other mass split here
-      val dangShare = if (dangActive)
-        pr.join(dang, Seq("node"), "left_semi")
-          .agg(coalesce(sum(col("pr")), lit(0L))).head.getLong(0) / n
-      else 0L
-      val contrib = adj.join(pr.withColumnRenamed("node", "src"), "src")
-        .select(col("ns"), expr("pr div size(ns)").as("c"))
-        .select(explode(col("ns")).as("node"), col("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("sc"))
-      // symmetric: contrib's key set == nodes (every node has an inbound
-      // mirror edge), so the dangling-node left join is the identity
-      pr = if (symmetric)
-        contrib.select(col("node"),
-          (lit(base) + expr(s"(85 * (sc + ${dangShare}L)) div 100")).as("pr"))
-      else nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(
-            s"(85 * (coalesce(sc, 0L) + ${dangShare}L)) div 100")).as("pr"))
-      // dangling mode: the next round's collect forces the state anyway —
-      // checkpoint so it is computed once, not re-derived per consumer
-      if (dangActive && i < iterations) pr = pr.localCheckpoint()
-      else if (i % checkpointInterval == 0 && i < iterations)
-        pr = pr.localCheckpoint()
+      val share = dangShare.fold("")(f => s" + ${f(pr)}L")
+      val sc = contrib(pr)
+      val damped = expr(s"(85 * ($sum0$share)) div 100")
+      pr = teleport match {
+        case Left(base) if symmetric => // join-free: one exchange per round
+          sc.select(col("node"), (lit(base) + damped).as("pr"))
+        case Left(base) => nodes.join(sc, Seq("node"), "left")
+          .select(col("node"), (lit(base) + damped).as("pr"))
+        case Right(basis) =>
+          basis.join(sc, Seq("node"), if (symmetric) "inner" else "left")
+            .select(col("node"), (col("sb") + damped).as("pr"))
+      }
+      if (i % checkpointInterval == 0 && i < iterations) pr = pr.localCheckpoint()
     }
     pr
   }
@@ -173,18 +215,17 @@ object Graph {
     * division of exact-in-double values (numerator ≤ maxdeg·10⁶ ≪ 2⁵³) —
     * bit-reproducible cross-engine.
     *
-    * Scale shape: the [[pageRank]]/[[bfsHops]] adjacency-index cost
-    * model, doubled because HITS scatters in both directions — an
-    * IN-index (dst, srcs[]) probed by the slim authority state (each
-    * authority scatters its score to its in-neighbors) and an OUT-index
-    * (src, dsts[]) probed by the hub state. Each index is one
+    * Scale shape: the [[adjacency]]-index cost model, doubled because
+    * HITS scatters in both directions — an IN-index (dst, srcs[])
+    * probed by the slim authority state (each authority scatters its
+    * score to its in-neighbors) and an OUT-index (src, ns[]) probed by
+    * the hub state. Each index is one
     * collect_set exchange (which also dedups parallel edges),
     * checkpointed once; each round is then two V-row equi-joins with
     * in-task explodes + partial-aggregated sums instead of two E-row
     * edge-table joins; the max is a 1-row broadcast. State checkpoints
     * once per round (it is consumed by the next round AND the final
-    * ranking). Same degree-skew contract as [[bfsHops]]: one adjacency
-    * array per node per executor row.
+    * ranking).
     *
     * @param edges (src, dst) rows
     * @return (kind, node, score): kind ∈ {hub, authority}, score 0..1000;
@@ -197,17 +238,12 @@ object Graph {
     // edges map-side); the in-index re-derives the edge set from the
     // materialized V-row out-index via an in-task explode — no raw E-row
     // checkpoint needed
-    // null endpoints dropped explicitly — the [[pageRank]] contract
     // LAZY checkpoints (round-10 job-floor cut): the in-index build
     // materializes the out-index, the first round's probe materializes
     // the in-index — no separate materialization jobs up front.
-    val outAdj = guardDegree(edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("dsts")),
-      "src", "dsts")
-      .localCheckpoint(false)
+    val outAdj = adjacency(nonNullEdges(edges))
     val inAdj = guardDegree(
-      outAdj.select(col("src"), explode(col("dsts")).as("dst"))
+      outAdj.select(col("src"), explode(col("ns")).as("dst"))
         .groupBy(col("dst"))
         .agg(collect_set(col("src")).as("srcs")),
       "dst", "srcs").localCheckpoint(false)
@@ -226,7 +262,7 @@ object Graph {
           floor(col("hr") * 1000 / col("hm")).cast("long").as("h"))
         .localCheckpoint(false) // lazy: araw's probe materializes it
       val araw = outAdj.join(hub.withColumnRenamed("node", "src"), "src")
-        .select(explode(col("dsts")).as("dst"), col("h"))
+        .select(explode(col("ns")).as("dst"), col("h"))
         .groupBy(col("dst")).agg(sum(col("h")).as("ar"))
       val amax = araw.agg(max(col("ar")).as("am"))
       auth = araw.crossJoin(broadcast(amax))
@@ -366,7 +402,15 @@ object Graph {
     e.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
 
-  private def triangleCountsOn(e: DataFrame, deg: DataFrame): DataFrame = {
+  private def triangleCountsOn(e: DataFrame, deg: DataFrame): DataFrame =
+    triangles(e, deg)
+      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
+
+  /** Each triangle of a canonical edge frame exactly once, as (a, b, c)
+    * with b < c — the [[triangleCounts]] degree-oriented enumeration over
+    * the frame's (n, d) degree table ([[degreesOf]]). */
+  private def triangles(e: DataFrame, deg: DataFrame): DataFrame = {
     // orient: tail = (degree, id)-smaller endpoint
     val dir = e
       .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
@@ -378,14 +422,11 @@ object Graph {
         when(col("du") < col("dv") ||
           (col("du") === col("dv") && col("u") < col("v")), col("v"))
           .otherwise(col("u")).as("hi"))
-    val wedges = dir.as("x").join(dir.as("y"),
+    // b < c by construction → (b, c) is already canonical for the close test
+    dir.as("x").join(dir.as("y"),
         col("x.lo") === col("y.lo") && col("x.hi") < col("y.hi"))
       .select(col("x.lo").as("a"), col("x.hi").as("b"), col("y.hi").as("c"))
-    // b < c by construction → (b, c) is already canonical for the close test
-    val tris = wedges.join(e,
-      col("b") === col("u") && col("c") === col("v"), "left_semi")
-    tris.select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
+      .join(e, col("b") === col("u") && col("c") === col("v"), "left_semi")
   }
 
   /** Per-node LOCAL CLUSTERING COEFFICIENT over the simple undirected
@@ -504,13 +545,10 @@ object Graph {
     * EXACTNESS: distances are integers produced only by min() and +1 —
     * no floats anywhere, bit-identical across engines and partitionings.
     *
-    * Scale shape: FRONTIER expansion over an ADJACENCY INDEX. One
-    * up-front collect_set aggregation folds the parallel-edge dedup and
-    * the grouping into a single exchange and materializes (src, ns[])
-    * — V index rows instead of E edge rows. Each round then probes the
-    * index with the (slim) frontier and explodes only the MATCHED
-    * adjacency lists: per-round cost O(V + |edges(frontier)|), where
-    * joining the raw edge table re-scans all E rows every round (the
+    * Scale shape: FRONTIER expansion over the [[adjacency]] index. Each
+    * round probes the index with the (slim) frontier and explodes only
+    * the MATCHED adjacency lists: per-round cost O(V + |edges(frontier)|),
+    * where joining the raw edge table re-scans all E rows every round (the
     * round-4 profile: 4 rounds × 2M-row edge scans dominated the query;
     * the index form scans 2M once and ~20k per round after). A node's
     * distance is final the round it appears (min over rounds ≡
@@ -522,11 +560,6 @@ object Graph {
     * rounds on the driver (the checkpoint already materialized it, so
     * the emptiness probe is control-plane — semantics are unchanged,
     * rounds past the eccentricity were always no-ops).
-    *
-    * Degree-skew caveat: one adjacency array per node must fit in an
-    * executor row (the collect_set contract) — fine through ~10⁷-degree
-    * hubs; a web-scale hub graph should pre-cap degree or salt-split
-    * hub rows upstream, the same contract as every collect_set here.
     *
     * @param edges (src, dst) rows; pass both directions for undirected
     * @param seeds (node) rows — the 0-distance sources
@@ -541,30 +574,8 @@ object Graph {
   def bfsHops(edges: DataFrame, seeds: DataFrame, rounds: Int = 6,
       symmetric: Boolean = false): DataFrame = {
     require(rounds >= 1, "bfsHops needs at least one round")
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false) // lazy: f0's count materializes it
-    // seeds outside the graph carry no edges and (as before) no row.
-    // Validating a seed against the src keys is one slim semi-join; only
-    // seeds that are NOT src keys (sink nodes — none at all in symmetric
-    // graphs) force the expensive dst-side membership pass, so that
-    // full-|E| explode is driver-gated on the remainder being non-empty
-    // (at 30× the unconditional node-set distinct was a third of the
-    // whole query).
-    // one checkpoint: sd feeds both the semi and the anti probe; the
-    // probes themselves are slim single-consumer frames (rem is re-derived
-    // on the rare non-empty path — cheaper than a barrier per query).
-    // symmetric: the anti probe is empty by construction, so sd has one
-    // consumer and stays lazy — no checkpoint job.
-    val sd0 = seeds.select(col("node")).distinct()
-    val sd = if (symmetric) sd0 else sd0.localCheckpoint()
-    val srcSeeds = sd.join(adj.select(col("src").as("node")),
-      Seq("node"), "left_semi")
-    val f0 = (if (symmetric || rem(sd, adj).isEmpty) srcSeeds
-      else srcSeeds.unionByName(
-        rem(sd, adj).join(adj.select(explode(col("ns")).as("node")).distinct(),
-          Seq("node"), "left_semi")))
+    val adj = adjacency(edges) // lazy: f0's count materializes it
+    val f0 = seedNodes(adj, seeds, symmetric)
       .withColumn("dist", lit(0L))
       .localCheckpoint(false)
     val layers = scala.collection.mutable.ArrayBuffer(f0)
@@ -590,9 +601,31 @@ object Graph {
       .reduce(_.unionByName(_))
   }
 
-  // seeds that are not src keys — the sink-node remainder ([[bfsHops]])
-  private def rem(sd: DataFrame, adj: DataFrame): DataFrame =
-    sd.join(adj.select(col("src").as("node")), Seq("node"), "left_anti")
+  /** The seeds present in an adjacency index's graph, as (node) rows — the
+    * distance-0 frontier of [[bfsHops]], [[sigmaLayers]] and
+    * [[ssspWeighted]]; seeds outside the graph carry no edges and no row.
+    * Validating a seed against the src keys is one slim semi-join; only
+    * seeds that are NOT src keys (sink nodes — none at all in symmetric
+    * graphs) force the expensive dst-side membership pass over `dsts`, so
+    * that full-|E| explode is driver-gated on the remainder being
+    * non-empty (at 30× the unconditional node-set distinct was a third of
+    * the whole query). One checkpoint: sd feeds both the semi and the
+    * anti probe; the probes themselves are slim single-consumer frames
+    * (the remainder is re-derived on the rare non-empty path — cheaper
+    * than a barrier per query). symmetric: the anti probe is empty by
+    * construction, so sd has one consumer and stays lazy — no checkpoint
+    * job. */
+  private def seedNodes(adj: DataFrame, seeds: DataFrame, symmetric: Boolean,
+      dsts: DataFrame => DataFrame = dstNodes): DataFrame = {
+    val sd0 = seeds.select(col("node")).distinct()
+    val sd = if (symmetric) sd0 else sd0.localCheckpoint()
+    val srcSeeds = sd.join(adj.select(col("src").as("node")),
+      Seq("node"), "left_semi")
+    def rem = sd.join(adj.select(col("src").as("node")), Seq("node"), "left_anti")
+    if (symmetric || rem.isEmpty) srcSeeds
+    else srcSeeds.unionByName(
+      rem.join(dsts(adj).distinct(), Seq("node"), "left_semi"))
+  }
 
   /** Multi-source BFS with SHORTEST-PATH COUNTS: every node within
     * `rounds` hops gets its exact hop distance AND σ = the number of
@@ -636,8 +669,7 @@ object Graph {
     * aggregates run on primitive long hash-agg buffers (half the
     * shuffle bytes, no per-row Decimal allocation). */
   private val loudCeil = 1L << 62
-  private def longLoud(c: org.apache.spark.sql.Column, what: String)
-      : org.apache.spark.sql.Column =
+  private def longLoud(c: Column, what: String): Column =
     when(c > lit(loudCeil) || c < 0L,
       raise_error(concat(
         lit(s"$what overflows the 2^62 long-accumulator guard: "),
@@ -649,48 +681,49 @@ object Graph {
       s"$op: long-typed sigma/delta accumulators need spark.sql.ansi." +
         "enabled=true (loud long-sum overflow instead of a silent wrap)")
 
-  /** Shared forward pass of [[bfsPathCounts]] / [[betweennessDependencies]]:
-    * the checkpointed adjacency index plus one checkpointed (node, dist,
-    * sigma) frame PER BFS LAYER (the backward pass needs the layer
-    * structure, not just the union). */
+  /** Forward pass of [[bfsPathCounts]] / [[betweennessDependencies]] from
+    * the seed set: the checkpointed adjacency index plus the
+    * [[brandesForward]] layers of the merged multi-source DAG. */
   private def sigmaLayers(edges: DataFrame, seeds: DataFrame, rounds: Int,
       symmetric: Boolean): (DataFrame, Seq[DataFrame]) = {
     require(rounds >= 1, "bfsPathCounts needs at least one round")
     requireAnsi(edges, "bfsPathCounts")
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false) // lazy: f0's count materializes it
-    val sd0 = seeds.select(col("node")).distinct()
-    val sd = if (symmetric) sd0 else sd0.localCheckpoint()
-    val srcSeeds = sd.join(adj.select(col("src").as("node")),
-      Seq("node"), "left_semi")
-    val f0 = (if (symmetric || rem(sd, adj).isEmpty) srcSeeds
-      else srcSeeds.unionByName(
-        rem(sd, adj).join(adj.select(explode(col("ns")).as("node")).distinct(),
-          Seq("node"), "left_semi")))
+    val adj = adjacency(edges) // lazy: f0's count materializes it
+    val f0 = seedNodes(adj, seeds, symmetric)
       .withColumn("dist", lit(0L))
       .withColumn("sigma", lit(1L))
       .localCheckpoint(false)
+    (adj, brandesForward(adj, f0, rounds, Nil))
+  }
+
+  /** Brandes' FORWARD pass from the checkpointed (keys, node, dist,
+    * sigma) frontier `f0`: one checkpointed frame PER BFS LAYER (the
+    * backward pass needs the layer structure). `keys` is empty for the
+    * merged multi-source DAG ([[sigmaLayers]]) and `s` for one DAG per
+    * sampled source ([[betweennessSampled]]). */
+  private def brandesForward(adj: DataFrame, f0: DataFrame, rounds: Int,
+      keys: Seq[String]): Seq[DataFrame] = {
+    def keyed(cs: Column*): Seq[Column] = keys.map(col) ++ cs
     val layers = scala.collection.mutable.ArrayBuffer(f0)
-    var frontier = f0.select(col("node"), col("sigma"))
+    var frontier = f0.select(keyed(col("node"), col("sigma")): _*)
     var r = 1
     // lazy checkpoint + count: materialization and emptiness probe share
     // one job per layer (the bfsHops round-10 cut)
     var done = f0.count() == 0L
     while (r <= rounds && !done) {
-      val reached = layers.map(_.select(col("node"))).reduce(_.unionByName(_))
+      val reached = layers.map(_.select(keyed(col("node")): _*))
+        .reduce(_.unionByName(_))
       val newly = adj
         .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-        .select(explode(col("ns")).as("node"), col("sigma"))
-        .groupBy(col("node"))
+        .select(keyed(explode(col("ns")).as("node"), col("sigma")): _*)
+        .groupBy(keyed(col("node")): _*)
         .agg(sum(col("sigma")).as("sigma"))
         .withColumn("sigma", longLoud(col("sigma"), "sigma"))
-        .join(reached, Seq("node"), "left_anti")
+        .join(reached, keys :+ "node", "left_anti")
         .withColumn("dist", lit(r.toLong))
         .localCheckpoint(false)
       layers += newly
-      frontier = newly.select(col("node"), col("sigma"))
+      frontier = newly.select(keyed(col("node"), col("sigma")): _*)
       done = newly.count() == 0L
       r += 1
     }
@@ -698,7 +731,46 @@ object Graph {
     // starts from a real horizon (an all-empty BFS keeps f0: the union
     // and the δ=0 base case are both well-defined on it)
     val ls = layers.toSeq
-    (adj, if (done && ls.size > 1) ls.init else ls)
+    if (done && ls.size > 1) ls.init else ls
+  }
+
+  /** Brandes' BACKWARD pass over [[brandesForward]]'s layers, keyed the
+    * same way: (keys, node, dist, sigma, delta_x9) states, shallowest
+    * first. Per layer the forward probe runs in reverse; the join with
+    * layer d+1's state keeps only DAG successors. LAZY states (round-10
+    * job-floor cut): each is read by the next-shallower successor join
+    * and by the caller's final union, both inside the output action's
+    * one job, so the pass costs one job, not one per layer. */
+  private def brandesBackward(adj: DataFrame, layers: Seq[DataFrame],
+      keys: Seq[String]): List[DataFrame] = {
+    def keyed(cs: Column*): Seq[Column] = keys.map(col) ++ cs
+    val zero = lit(0L)
+    var states = List(layers.last.withColumn("delta_x9", zero)
+      .localCheckpoint(false))
+    for (d <- layers.size - 2 to 0 by -1) {
+      val next = states.head.select(keyed(col("node").as("w"),
+        col("sigma").as("__sw"), col("delta_x9").as("__dw")): _*)
+      val terms = adj
+        .join(layers(d).select(keyed(col("node").as("src"),
+          col("sigma").as("__sv")): _*), Seq("src"))
+        .select(keyed(col("src").as("node"), col("__sv"),
+          explode(col("ns")).as("w")): _*)
+        .join(next, keys :+ "w") // keeps only successors (dist = d+1)
+        .select(keyed(col("node"),
+          graft.functions.BrandesTerm(col("__sv"), col("__dw"), col("__sw"))
+            .as("__t")): _*)
+        .groupBy(keyed(col("node")): _*)
+        .agg(sum(col("__t")).as("__dsum"))
+      states = layers(d)
+        .join(terms, keys :+ "node", "left")
+        // longLoud is null-transparent (a null sum falls to the otherwise
+        // branch), so the guard composes with the left-join coalesce
+        .select(keyed(col("node"), col("dist"), col("sigma"),
+          coalesce(longLoud(col("__dsum"), "delta_x9"), zero)
+            .as("delta_x9")): _*)
+        .localCheckpoint(false) :: states
+    }
+    states
   }
 
   /** Betweenness-centrality dependencies — Brandes' BACKWARD pass over the
@@ -721,11 +793,9 @@ object Graph {
     * the exact bits with 128-bit `//`.
     *
     * Scale shape: the forward pass is [[bfsPathCounts]] (V-row adjacency
-    * index, one probe per layer); the backward pass runs the SAME probe
-    * per layer in reverse — layer d's nodes probe the index, matched
-    * adjacency lists explode in-task, and the join with layer d+1's
-    * checkpointed state keeps only DAG successors; one map-side-combinable
-    * aggregate per layer. Bounded rounds ⇒ bounded (2·rounds) joins total.
+    * index, one probe per layer); the backward pass
+    * ([[brandesBackward]]) runs the SAME probe per layer in reverse.
+    * Bounded rounds ⇒ bounded (2·rounds) joins total.
     * Like the forward σ, δ of the horizon layer is DEFINED over the
     * truncated DAG: nodes past `rounds` hops contribute nothing (callers
     * size `rounds` to the radius they care about — the [[kCore]]
@@ -736,38 +806,8 @@ object Graph {
   def betweennessDependencies(edges: DataFrame, seeds: DataFrame,
       rounds: Int = 4, symmetric: Boolean = false): DataFrame = {
     val (adj, layers) = sigmaLayers(edges, seeds, rounds, symmetric)
-    val zero = lit(0L)
-    // LAZY backward states (round-10 job-floor cut): each state is read
-    // by the next-shallower round's successor join and by the final
-    // union — both land in the single job the output action runs, so the
-    // whole backward pass collapses from one eager job per layer into
-    // one job, with each marked frame persisted at first compute.
-    var states = List(layers.last.withColumn("delta_x9", zero)
-      .localCheckpoint(false))
-    for (d <- layers.size - 2 to 0 by -1) {
-      val next = states.head.select(col("node").as("w"),
-        col("sigma").as("__sw"), col("delta_x9").as("__dw"))
-      val terms = adj
-        .join(layers(d).select(col("node").as("src"), col("sigma").as("__sv")),
-          Seq("src"))
-        .select(col("src").as("node"), col("__sv"),
-          explode(col("ns")).as("w"))
-        .join(next, Seq("w")) // keeps only successors (dist = d+1)
-        .select(col("node"),
-          graft.functions.BrandesTerm(col("__sv"), col("__dw"), col("__sw"))
-            .as("__t"))
-        .groupBy(col("node"))
-        .agg(sum(col("__t")).as("__dsum"))
-      states = layers(d)
-        .join(terms, Seq("node"), "left")
-        // longLoud is null-transparent (a null sum falls to the otherwise
-        // branch), so the guard composes with the left-join coalesce
-        .select(col("node"), col("dist"), col("sigma"),
-          coalesce(longLoud(col("__dsum"), "delta_x9"), zero).as("delta_x9"))
-        .localCheckpoint(false) :: states
-    }
-    states.map(_.select(col("node"), col("dist"), col("sigma"),
-      col("delta_x9"))).reduce(_.unionByName(_))
+    brandesBackward(adj, layers, Nil).map(_.select(col("node"), col("dist"),
+      col("sigma"), col("delta_x9"))).reduce(_.unionByName(_))
   }
 
   /** SAMPLED-SOURCE betweenness — the form a 100 TB graph actually runs
@@ -804,15 +844,13 @@ object Graph {
     require(k >= 1, "betweennessSampled needs at least one source")
     require(rounds >= 1, "betweennessSampled needs at least one round")
     requireAnsi(edges, "betweennessSampled")
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false) // lazy: the node count materializes it
-    val nodes = (if (symmetric) adj.select(col("src").as("node"))
-      else adj.select(col("src").as("node"))
-        .unionByName(adj.select(explode(col("ns")).as("node"))))
-      // lazy: the count below is the first consumer and materializes it
-      .distinct().localCheckpoint(false)
+    val adj = adjacency(edges) // lazy: the node count materializes it
+    // lazy: the count below is the first consumer and materializes it
+    // (the symmetric key set is already distinct)
+    val nodes = {
+      val ns = nodeSet(adj, symmetric)
+      if (symmetric) ns.localCheckpoint(false) else ns
+    }
     val n = nodes.count()
     // deterministic sample: k smallest unsigned-md5 node ids (the ANN
     // seed discipline — replayable as ORDER BY md5_number_lower LIMIT k).
@@ -824,61 +862,13 @@ object Graph {
       .orderBy(col("__m"), col("node"))
       .limit(k)
       .select(col("node").as("s"))
-    // batched per-source forward pass: layers keyed (s, node).
-    // lazy checkpoint + count per layer — the bfsHops round-10 cut.
+    // batched per-source passes: layers and states keyed (s, node)
     val f0 = srcs.select(col("s"), col("s").as("node"))
       .withColumn("dist", lit(0L))
       .withColumn("sigma", lit(1L))
       .localCheckpoint(false)
-    val layers = scala.collection.mutable.ArrayBuffer(f0)
-    var frontier = f0.select(col("s"), col("node"), col("sigma"))
-    var r = 1
-    var done = f0.count() == 0L
-    while (r <= rounds && !done) {
-      val reached = layers.map(_.select(col("s"), col("node")))
-        .reduce(_.unionByName(_))
-      val newly = adj
-        .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("s"), explode(col("ns")).as("node"), col("sigma"))
-        .groupBy(col("s"), col("node"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .withColumn("sigma", longLoud(col("sigma"), "sigma"))
-        .join(reached, Seq("s", "node"), "left_anti")
-        .withColumn("dist", lit(r.toLong))
-        .localCheckpoint(false)
-      layers += newly
-      frontier = newly.select(col("s"), col("node"), col("sigma"))
-      done = newly.count() == 0L
-      r += 1
-    }
-    val ls0 = layers.toSeq
-    val ls = if (done && ls0.size > 1) ls0.init else ls0
-    // batched backward pass: δ per (s, node), deepest layer first —
-    // lazy states, the [[betweennessDependencies]] round-10 cut (the
-    // whole backward chain runs as one job under the output action)
-    val zero = lit(0L)
-    var states = List(ls.last.withColumn("delta_x9", zero)
-      .localCheckpoint(false))
-    for (d <- ls.size - 2 to 0 by -1) {
-      val next = states.head.select(col("s"), col("node").as("w"),
-        col("sigma").as("__sw"), col("delta_x9").as("__dw"))
-      val terms = adj
-        .join(ls(d).select(col("s"), col("node").as("src"),
-          col("sigma").as("__sv")), Seq("src"))
-        .select(col("s"), col("src").as("node"), col("__sv"),
-          explode(col("ns")).as("w"))
-        .join(next, Seq("s", "w")) // same-source successors only
-        .select(col("s"), col("node"),
-          graft.functions.BrandesTerm(col("__sv"), col("__dw"), col("__sw"))
-            .as("__t"))
-        .groupBy(col("s"), col("node"))
-        .agg(sum(col("__t")).as("__dsum"))
-      states = ls(d)
-        .join(terms, Seq("s", "node"), "left")
-        .select(col("s"), col("node"), col("dist"), col("sigma"),
-          coalesce(longLoud(col("__dsum"), "delta_x9"), zero).as("delta_x9"))
-        .localCheckpoint(false) :: states
-    }
+    val keys = Seq("s")
+    val states = brandesBackward(adj, brandesForward(adj, f0, rounds, keys), keys)
     val all = states.map(_.select(col("s"), col("node"), col("delta_x9")))
       .reduce(_.unionByName(_))
     all.filter(col("node") =!= col("s")) // endpoints excluded (Brandes)
@@ -910,9 +900,8 @@ object Graph {
     * and partition layouts. Non-seed nodes with no inbound mass sit at
     * exactly 0.
     *
-    * Scale shape: identical to [[pageRank]] — one collect_set exchange
-    * builds the V-row adjacency index; each round equi-joins the slim
-    * rank state and explodes matched lists in-task. The only addition is
+    * Scale shape: identical to [[pageRank]] ([[powerIteration]] over the
+    * [[adjacency]] index). The only addition is
     * the (node, seed-base) frame, built once by a left-semi-derived flag
     * join and checkpointed: per-round cost is unchanged. |S| counts only
     * seeds PRESENT in the graph (a seed with no edges can neither give
@@ -930,15 +919,9 @@ object Graph {
       iterations: Int = 5, checkpointInterval: Int = 8,
       symmetric: Boolean = false): DataFrame = {
     require(iterations >= 1, "personalizedPageRank needs at least one iteration")
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false) // lazy: the seed count materializes it
-    val nodes = if (symmetric) adj.select(col("src").as("node"))
-      else adj.select(col("src").as("node"))
-        .unionByName(adj.select(explode(col("ns")).as("node")))
-        .distinct().localCheckpoint(false)
+    // lazy index: the seed count materializes it
+    val adj = adjacency(nonNullEdges(edges))
+    val nodes = nodeSet(adj, symmetric)
     val sd = seeds.select(col("node")).distinct()
       .join(nodes, Seq("node"), "left_semi")
     // (node, sb) — per-node teleport base, the only state beyond pageRank's;
@@ -953,25 +936,11 @@ object Graph {
     val basis = flagged.select(col("node"),
       when(col("__s").isNotNull, lit(150000000000L / nSeeds))
         .otherwise(lit(0L)).as("sb"))
-    var pr = flagged.select(col("node"),
+    val pr0 = flagged.select(col("node"),
       when(col("__s").isNotNull, lit(1000000000000L / nSeeds))
         .otherwise(lit(0L)).as("pr"))
-    for (i <- 1 to iterations) {
-      val contrib = adj.join(pr.withColumnRenamed("node", "src"), "src")
-        .select(col("ns"), expr("pr div size(ns)").as("c"))
-        .select(explode(col("ns")).as("node"), col("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("sc"))
-      // symmetric: every node receives a contribution row (mirror edges),
-      // so basis ⋈ contrib is total — inner join, one exchange
-      pr = if (symmetric)
-        basis.join(contrib, Seq("node"))
-          .select(col("node"), (col("sb") + expr("(85 * sc) div 100")).as("pr"))
-      else basis.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (col("sb") + expr("(85 * coalesce(sc, 0L)) div 100")).as("pr"))
-      if (i % checkpointInterval == 0 && i < iterations) pr = pr.localCheckpoint()
-    }
-    pr
+    powerIteration(pr0, iterations, checkpointInterval, symmetric, nodes,
+      Right(basis), uniformContrib(adj))
   }
 
   /** WEIGHTED PageRank: each node's rank splits across its out-edges in
@@ -1017,29 +986,17 @@ object Graph {
         sum(col("w")).as("sw")),
       "src", "ns")
       .localCheckpoint(false) // lazy: the node count materializes it
-    val nodes = if (symmetric) adj.select(col("src").as("node"))
-      else adj.select(col("src").as("node"))
-        .unionByName(adj.select(explode(col("ns")).as("e"))
-          .select(col("e.dst").as("node")))
-        .distinct().localCheckpoint(false)
+    val nodes = nodeSet(adj, symmetric, weightedDstNodes)
     val n = nodes.count()
-    val base = 150000000000L / n
-    var pr = nodes.withColumn("pr", lit(1000000000000L / n))
-    for (i <- 1 to iterations) {
-      val contrib = adj.join(pr.withColumnRenamed("node", "src"), "src")
+    val contrib = (pr: DataFrame) =>
+      adj.join(pr.withColumnRenamed("node", "src"), "src")
         .select(explode(col("ns")).as("e"), col("pr"), col("sw"))
         .select(col("e.dst").as("node"),
           expr("(pr * e.w) div sw").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("sc"))
-      pr = if (symmetric)
-        contrib.select(col("node"),
-          (lit(base) + expr("(85 * sc) div 100")).as("pr"))
-      else nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr("(85 * coalesce(sc, 0L)) div 100")).as("pr"))
-      if (i % checkpointInterval == 0 && i < iterations) pr = pr.localCheckpoint()
-    }
-    pr
+    powerIteration(nodes.withColumn("pr", lit(1000000000000L / n)),
+      iterations, checkpointInterval, symmetric, nodes,
+      Left(150000000000L / n), contrib)
   }
 
   /** Bounded-round single-source(-set) shortest paths over NON-NEGATIVE
@@ -1116,17 +1073,7 @@ object Graph {
       // lazy: the rounds chain into one job whose first probe
       // materializes the index (round-10 job-floor cut)
       .localCheckpoint(false)
-    val sd0 = seeds.select(col("node")).distinct()
-    val sd = if (symmetric) sd0 else sd0.localCheckpoint()
-    val srcSeeds = sd.join(adj.select(col("src").as("node")),
-      Seq("node"), "left_semi")
-    // sink-only seeds: the bfsHops driver-gated membership probe
-    var dist = (if (symmetric || rem(sd, adj).isEmpty) srcSeeds
-      else srcSeeds.unionByName(
-        rem(sd, adj).join(
-          adj.select(explode(col("ns")).as("e"))
-            .select(col("e.dst").as("node")).distinct(),
-          Seq("node"), "left_semi")))
+    var dist = seedNodes(adj, seeds, symmetric, weightedDstNodes)
       .withColumn("cost", lit(0L))
     for (r <- 1 to rounds) {
       // right join: every reached node survives (explode_outer + coalesce
@@ -1183,16 +1130,9 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int = 3,
       symmetric: Boolean = false): DataFrame = {
     require(rounds >= 1, "labelPropagation needs at least one round")
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false) // lazy: the first probe materializes it
-    val nodes = if (symmetric) adj.select(col("src").as("node"))
-      else adj.select(col("src").as("node"))
-        .unionByName(adj.select(explode(col("ns")).as("node")))
-        .distinct().localCheckpoint(false)
-    var lab = nodes.select(col("node"), col("node").as("label"))
+    // lazy index: the first probe materializes it
+    val adj = adjacency(nonNullEdges(edges))
+    var lab = nodeSet(adj, symmetric).select(col("node"), col("node").as("label"))
     for (r <- 1 to rounds) {
       val cnt = adj.join(lab.withColumnRenamed("node", "src"), "src")
         .select(explode(col("ns")).as("node"), col("label"))
@@ -1263,31 +1203,44 @@ object Graph {
       "src", "ns").localCheckpoint(false) // lazy: first probe materializes
     val deg = adj.select(col("src").as("node"),
       size(col("ns")).cast("long").as("k"))
+    val mass = (lab: DataFrame) =>
+      adj.join(lab.withColumnRenamed("node", "src"), Seq("src"))
+        .select(explode(col("ns")).as("node"), col("label"))
+        .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
+    moveRounds(deg, m, rounds, mass, lit(true))
+  }
+
+  /** The one synchronous MOVE ROUND loop of [[modularityMoves]] and
+    * [[modularityMovesWeighted]] over the (node, k) degree frame `deg`:
+    * `mass` maps the (node, label) state to (node, label, c)
+    * neighbor-label mass, and only candidates passing `admissible`
+    * (over label and __cur) are scored. */
+  private def moveRounds(deg: DataFrame, m: Long, rounds: Int,
+      mass: DataFrame => DataFrame, admissible: Column): DataFrame = {
     var lab = deg.select(col("node"), col("node").as("label"))
     for (r <- 1 to rounds) {
       // (node, cur, k) once per round: one V-row join instead of separate
       // cur and deg joins against the E-row candidate frame below. NOT
       // checkpointed (the round-10 job-floor cut): both parents are
-      // materialized (lab checkpointed per round, deg a projection of the
-      // checkpointed index), so each of the three consumers re-derives a
-      // slim V-row join inside its own stage instead of paying an eager
-      // materialization job + block-store copy per round.
+      // materialized (lab checkpointed per round, deg checkpointed or a
+      // projection of a checkpointed index), so each of the three
+      // consumers re-derives a slim V-row join inside its own stage
+      // instead of paying an eager materialization job + block-store copy
+      // per round.
       val state = lab.select(col("node"), col("label").as("__cur"))
         .join(deg, Seq("node"))
       val tot = state.groupBy(col("__cur").as("label"))
         .agg(sum(col("k")).as("tot"))
-      val cnt = adj.join(lab.withColumnRenamed("node", "src"), Seq("src"))
-        .select(explode(col("ns")).as("node"), col("label"))
-        .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
       // the node's CURRENT community is always a candidate, even when no
       // neighbor shares it. NO dedup aggregate: when cur is also a
-      // neighbor label, its zero-count row scores strictly below the true
+      // neighbor label, its zero-mass row scores strictly below the true
       // row of the SAME label (score is monotone in c), so the argmax is
       // untouched — a full E-row re-aggregation bought nothing.
-      val cand = cnt.unionByName(
+      val cand = mass(lab).unionByName(
         state.select(col("node"), col("__cur").as("label"), lit(0L).as("c")))
       val scored = cand
         .join(state, Seq("node"))
+        .filter(admissible)
         .join(tot, Seq("label"))
         .select(col("node"), col("label"),
           (lit(2L * m).cast("decimal(38,0)") * col("c") -
@@ -1343,20 +1296,31 @@ object Graph {
   def contractGraph(edges: DataFrame, labels: DataFrame,
       canonical: Boolean = false): DataFrame = {
     val e = canonicalFrame(edges, canonical)
+    labelEndpoints(e, labels, "label_a", "label_b")
+      .groupBy(col("label_a"), col("label_b"))
+      .agg(count(lit(1)).as("weight"))
+  }
+
+  /** Both endpoints of a (u, v, extra…) edge frame relabeled, as
+    * (lo, hi, extra…) with lo = least and hi = greatest label — the
+    * shared front of [[contractGraph]] and [[contractGraphWeighted]],
+    * each of which keeps its own rollup aggregate. An unlabeled endpoint
+    * fails loudly ([[contractGraph]]'s contract). */
+  private def labelEndpoints(e: DataFrame, labels: DataFrame, lo: String,
+      hi: String, extra: Column*): DataFrame = {
     // two consumers (u- and v-side joins): one V-row materialization
     val lbl = uniqueLabels(labels, "contractGraph").localCheckpoint(false)
-    val guard = (l: org.apache.spark.sql.Column) => when(l.isNull,
+    val guard = (l: Column) => when(l.isNull,
       raise_error(concat(lit("contractGraph: unlabeled edge endpoint "),
         lit("(labels must cover every node in the edge set)")))).otherwise(l)
     e.join(lbl.select(col("node").as("u"), col("label").as("lu")),
         Seq("u"), "left")
       .join(lbl.select(col("node").as("v"), col("label").as("lv")),
         Seq("v"), "left")
-      .select(guard(col("lu")).as("lu"), guard(col("lv")).as("lv"))
-      .select(least(col("lu"), col("lv")).as("label_a"),
-        greatest(col("lu"), col("lv")).as("label_b"))
-      .groupBy(col("label_a"), col("label_b"))
-      .agg(count(lit(1)).as("weight"))
+      .select(Seq(guard(col("lu")).as("lu"), guard(col("lv")).as("lv")) ++
+        extra: _*)
+      .select(Seq(least(col("lu"), col("lv")).as(lo),
+        greatest(col("lu"), col("lv")).as(hi)) ++ extra: _*)
   }
 
   /** Weighted synchronous modularity moves — [[modularityMoves]]' exact
@@ -1408,43 +1372,21 @@ object Graph {
         (coalesce(col("nw"), lit(0L)) + coalesce(col("sw"), lit(0L)))
           .as("k"))
       .localCheckpoint(false) // lazy: the first round's tot materializes
-    var lab = deg.select(col("node"), col("node").as("label"))
-    for (r <- 1 to rounds) {
-      // un-checkpointed V-row state join — the [[modularityMoves]]
-      // round-10 job-floor cut (both parents materialized)
-      val state = lab.select(col("node"), col("label").as("__cur"))
-        .join(deg, Seq("node"))
-      val tot = state.groupBy(col("__cur").as("label"))
-        .agg(sum(col("k")).as("tot"))
-      val cnt = adj.join(lab.withColumnRenamed("node", "src"), Seq("src"))
+    val mass = (lab: DataFrame) =>
+      adj.join(lab.withColumnRenamed("node", "src"), Seq("src"))
         .select(explode(col("ns")).as("n"), col("label"))
         .groupBy(col("n.dst").as("node"), col("label"))
         .agg(sum(col("n.w")).as("c"))
-      val cand = cnt.unionByName(
-        state.select(col("node"), col("__cur").as("label"), lit(0L).as("c")))
-      val scored = cand
-        .join(state, Seq("node"))
-        // MONOTONE move rule: only candidates with label ≤ current are
-        // admissible. Synchronous argmax moves 2-cycle on mutually-
-        // attracted community PAIRS (A adopts B's label while B adopts
-        // A's — fatal on coarse graphs, where communities come in
-        // attracted pairs by construction); restricting moves to
-        // label-descending makes Σ labels strictly decrease whenever
-        // anything moves, so the sweep TERMINATES — no oscillation at
-        // any level — at the documented price that only the lower-id
-        // community of a pair can absorb the other (one extra round
-        // instead of a swap).
-        .filter(col("label") <= col("__cur"))
-        .join(tot, Seq("label"))
-        .select(col("node"), col("label"),
-          (lit(2L * m).cast("decimal(38,0)") * col("c") -
-            col("k").cast("decimal(38,0)") *
-              (col("tot") - when(col("label") === col("__cur"), col("k"))
-                .otherwise(lit(0L)))).as("s"))
-      lab = argmaxLabel(scored, m)
-      if (r < rounds) lab = lab.localCheckpoint(false) // lazy barrier
-    }
-    lab
+    // MONOTONE move rule: only candidates with label ≤ current are
+    // admissible. Synchronous argmax moves 2-cycle on mutually-attracted
+    // community PAIRS (A adopts B's label while B adopts A's — fatal on
+    // coarse graphs, where communities come in attracted pairs by
+    // construction); restricting moves to label-descending makes Σ labels
+    // strictly decrease whenever anything moves, so the sweep TERMINATES —
+    // no oscillation at any level — at the documented price that only the
+    // lower-id community of a pair can absorb the other (one extra round
+    // instead of a swap).
+    moveRounds(deg, m, rounds, mass, col("label") <= col("__cur"))
   }
 
   /** Weight-preserving [[contractGraph]]: same label joins and loud
@@ -1452,21 +1394,9 @@ object Graph {
     * rows, and intra-community mass lands on (l, l) self-loops — the
     * exact coarse graph the next Louvain level moves on. */
   private[ops] def contractGraphWeighted(wedges: DataFrame,
-      labels: DataFrame): DataFrame = {
-    val lbl = uniqueLabels(labels, "contractGraph").localCheckpoint(false)
-    val guard = (l: org.apache.spark.sql.Column) => when(l.isNull,
-      raise_error(concat(lit("contractGraph: unlabeled edge endpoint "),
-        lit("(labels must cover every node in the edge set)")))).otherwise(l)
-    wedges
-      .join(lbl.select(col("node").as("u"), col("label").as("lu")),
-        Seq("u"), "left")
-      .join(lbl.select(col("node").as("v"), col("label").as("lv")),
-        Seq("v"), "left")
-      .select(guard(col("lu")).as("lu"), guard(col("lv")).as("lv"), col("w"))
-      .select(least(col("lu"), col("lv")).as("u"),
-        greatest(col("lu"), col("lv")).as("v"), col("w"))
+      labels: DataFrame): DataFrame =
+    labelEndpoints(wedges, labels, "u", "v", col("w"))
       .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
-  }
 
   /** Multi-level LOUVAIN (Blondel et al. 2008, public literature) — the
     * composed move → contract → move pipeline the round-7 verdict asked
@@ -1687,29 +1617,6 @@ object Graph {
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
   }
 
-  /** Coreness (k-core number) of every node via the H-INDEX ITERATION
-    * (Lü, Chen, Ren, Zhang, Yan & Zhou 2016): c₀(v) = deg(v), then each
-    * round c(v) ← H({c(u) : u ∈ N(v)}) — the largest h such that at
-    * least h neighbors currently hold value ≥ h. The sequence is
-    * monotone non-increasing per node and converges to the exact core
-    * number, so a BOUNDED round count yields a per-node UPPER bound that
-    * is exact wherever the iteration has settled (the pageRank/bfsHops
-    * bounded-round contract; deep nested-core chains need more rounds).
-    * Unlike [[kCore]] (fixed k, global peeling) this produces the whole
-    * decomposition in one pass family — the standard "how deep in the
-    * graph's cohesive core is this node" curation signal.
-    *
-    * Scale shape: the adjacency index builds once ([[guardDegree]]
-    * contract); each round equi-joins the slim (node, c) state against
-    * the index, explodes in-task, and computes the H-index RELATIONALLY —
-    * desc-sort the collected neighbor values, posexplode, count positions
-    * with value ≥ position — keeping every stage whole-stage codegen
-    * (the orderedPairs HOF lesson: an aggregate()/zip_with() form splits
-    * the span). Per round: E in-task rows, two V-row exchanges.
-    *
-    * @param edges (src, dst) rows, any direction/duplication
-    * @return (node, coreness) — exact once converged, else upper bound
-    */
   /** k-truss of the simple undirected graph — the subgraph where every
     * surviving edge sits in ≥ k−2 triangles OF THE SUBGRAPH (Cohen 2008):
     * the edge-level cohesion cut one notch stronger than [[kCore]]
@@ -1738,8 +1645,7 @@ object Graph {
     val minSup = (k - 2).toLong
     var e = canonicalFrame(edges, canonical)
     def supportOf(ed: DataFrame): DataFrame = {
-      val tris = trianglesOf(ed)
-      tris.select(explode(array(
+      triangles(ed, degreesOf(ed)).select(explode(array(
           struct(least(col("a"), col("b")).as("u"),
             greatest(col("a"), col("b")).as("v")),
           struct(least(col("a"), col("c")).as("u"),
@@ -1824,26 +1730,29 @@ object Graph {
     mis
   }
 
-  /** Each triangle of a canonical edge frame exactly once, as (a, b, c)
-    * with b < c (the [[triangleCounts]] degree-oriented enumeration). */
-  private def trianglesOf(e: DataFrame): DataFrame = {
-    val deg = degreesOf(e)
-    val dir = e
-      .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
-      .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
-      .select(
-        when(col("du") < col("dv") ||
-          (col("du") === col("dv") && col("u") < col("v")), col("u"))
-          .otherwise(col("v")).as("lo"),
-        when(col("du") < col("dv") ||
-          (col("du") === col("dv") && col("u") < col("v")), col("v"))
-          .otherwise(col("u")).as("hi"))
-    dir.as("x").join(dir.as("y"),
-        col("x.lo") === col("y.lo") && col("x.hi") < col("y.hi"))
-      .select(col("x.lo").as("a"), col("x.hi").as("b"), col("y.hi").as("c"))
-      .join(e, col("b") === col("u") && col("c") === col("v"), "left_semi")
-  }
-
+  /** Coreness (k-core number) of every node via the H-INDEX ITERATION
+    * (Lü, Chen, Ren, Zhang, Yan & Zhou 2016): c₀(v) = deg(v), then each
+    * round c(v) ← H({c(u) : u ∈ N(v)}) — the largest h such that at
+    * least h neighbors currently hold value ≥ h. The sequence is
+    * monotone non-increasing per node and converges to the exact core
+    * number, so a BOUNDED round count yields a per-node UPPER bound that
+    * is exact wherever the iteration has settled (the pageRank/bfsHops
+    * bounded-round contract; deep nested-core chains need more rounds).
+    * Unlike [[kCore]] (fixed k, global peeling) this produces the whole
+    * decomposition in one pass family — the standard "how deep in the
+    * graph's cohesive core is this node" curation signal.
+    *
+    * Scale shape: the adjacency index builds once ([[guardDegree]]
+    * contract); each round equi-joins the slim (node, c) state against
+    * the index, explodes in-task, and computes the H-index RELATIONALLY —
+    * desc-sort the collected neighbor values, posexplode, count positions
+    * with value ≥ position — keeping every stage whole-stage codegen
+    * (the orderedPairs HOF lesson: an aggregate()/zip_with() form splits
+    * the span). Per round: E in-task rows, two V-row exchanges.
+    *
+    * @param edges (src, dst) rows, any direction/duplication
+    * @return (node, coreness) — exact once converged, else upper bound
+    */
   def coreness(edges: DataFrame, rounds: Int = 4,
       canonical: Boolean = false): DataFrame = {
     require(rounds >= 1, "rounds must be positive")

@@ -31,6 +31,13 @@ object Profile {
     * ±rsd on n_distinct. Exact mode is the oracle-gated default; at a
     * measured 30× scale the exact multi-distinct Expand over two
     * ~4.5M-distinct columns costs ~11 s vs ~1 s approx.
+    *
+    * Exact mode assumes a DETERMINISTIC input: its two scans evaluate
+    * `df` twice, so an input that can yield different rows per
+    * evaluation (a nondeterministic sample, an unseeded rand filter, a
+    * source that changes between reads) can give counts and min/max from
+    * one set of rows and distinct counts from another. Checkpoint such an
+    * input before profiling it.
     */
   def profile(df: DataFrame, cols: Seq[(String, Column)],
       approxDistinct: Boolean = false, rsd: Double = 0.01): DataFrame = {

@@ -278,8 +278,15 @@ class EavScan(transport: EavTransport, chunkSize: Int, required: StructType,
     * extraction joined to a 3-participant cohort fetches ≤ 1 chunk). */
   private var runtimeIds: Option[Set[String]] = None
 
+  /** `record_id` is advertised only while the pruned read schema still
+    * holds it: runtime filtering resolves every advertised attribute
+    * against the scan's output, and a plan that pruned the column away
+    * (e.g. one that reads only field_name) must not be offered a filter
+    * on it. */
   override def filterAttributes(): Array[NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column("record_id"))
+    if (required.fieldNames.contains("record_id"))
+      Array(org.apache.spark.sql.connector.expressions.Expressions.column("record_id"))
+    else Array.empty
 
   override def filter(filters: Array[Filter]): Unit = {
     val sets = filters.collect {

@@ -29,15 +29,6 @@ object EventStreams {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
       .select(col("window.start").as("w_start"), col("event_type"), col("n"), col("sum_value"))
 
-  /** Sliding-window event rate per user. */
-  def slidingRate(events: DataFrame, windowLen: String = "10 minutes",
-      slide: String = "5 minutes", watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("user_id"), col("n"))
-
   /** Session windows: activity bursts per user separated by ≥gap idle. */
   def sessionCounts(events: DataFrame, gap: String = "30 minutes",
       watermark: String = "30 minutes"): DataFrame =

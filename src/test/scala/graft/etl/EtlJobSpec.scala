@@ -69,6 +69,37 @@ class EtlJobSpec extends SparkSpec {
     assert(Files.readString(java.nio.file.Paths.get(s"$dir/out/header.json")) == out.header)
   }
 
+  test("unknown fields count under default settings (dynamic partition " +
+      "pruning on) with dob_shifting") {
+    // the unknown-field plan reads only field_name from the extract, so the
+    // scan must not offer record_id to runtime filtering
+    assert(spark.conf.get(
+      "spark.sql.optimizer.dynamicPartitionPruning.enabled") == "true")
+    val eav = write("records_unknown.csv",
+      """record_id,redcap_event_name,redcap_repeat_instrument,redcap_repeat_instance,field_name,value
+        |r1,screening_arm_1,,,np_dob,1990-05-20
+        |r1,screening_arm_1,,,age,34
+        |r1,screening_arm_1,,,visit_date,2001-06-15
+        |r1,screening_arm_1,,,mystery,7
+        |r2,screening_arm_1,,,age,55
+        |""".stripMargin)
+    val cfg = IniConfig.parse(
+      s"""[default]
+         |field_map_file = $fieldMapCsv
+         |out_dir = $dir/outunknown
+         |[dcc_transforms]
+         |datetransform_type = dob_shifting
+         |standard_date = 2010-01-01
+         |dob_shift_inplace = true
+         |[redcap]
+         |eav_source = $eav
+         |chunk_size = 100
+         |""".stripMargin)
+    val unknown = EtlJob.run(spark, cfg).pipeline.unknownFields
+    assert(unknown.count() == 1L)
+    assert(unknown.select("field_name").as[String].collect().toSeq == Seq("mystery"))
+  }
+
   test("include_metadata ships kept-field metadata in the header") {
     val metaJson = write("metadata.json",
       """[{"field_name":"age","field_label":"Age","field_type":"text"},

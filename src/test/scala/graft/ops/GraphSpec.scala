@@ -275,6 +275,27 @@ class GraphSpec extends SparkSpec {
     assert(gen == rep)
   }
 
+  test("personalizedPageRank with every node a seed ≡ pageRank, bit for " +
+      "bit: general graph with a dangling sink, and symmetric mirrored " +
+      "edges") {
+    // |S| = N: the seed base and the initial rank are pageRank's own
+    // 150000000000 div N and 1e12 div N, so the two recurrences coincide
+    def same(edges: org.apache.spark.sql.DataFrame, symmetric: Boolean) = {
+      val all = edges.select($"src".as("node"))
+        .union(edges.select($"dst".as("node")))
+      val ppr = Graph.personalizedPageRank(edges, all, iterations = 4,
+        symmetric = symmetric).as[(Long, Long)].collect().toMap
+      val pr = Graph.pageRank(edges, iterations = 4, symmetric = symmetric)
+        .as[(Long, Long)].collect().toMap
+      assert(ppr.size > 0 && ppr == pr, s"ppr $ppr vs pageRank $pr")
+    }
+    // 6 is a sink (no out-edges): its mass leaks in both operators
+    same(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L),
+      (2L, 6L), (5L, 6L), (1L, 2L)).toDF("src", "dst"), symmetric = false)
+    same(Graph.undirectedEdges(Seq(Seq(1L, 2L, 3L), Seq(3L, 4L),
+      Seq(4L, 5L, 6L, 7L)).toDF("ps"), "ps"), symmetric = true)
+  }
+
   /** Local replica of pageRankWeighted's integer recurrence. */
   private def localWPR(edges: Seq[(Long, Long, Long)], iters: Int): Map[Long, Long] = {
     val e = edges
